@@ -172,8 +172,8 @@ def q_cdc_merge_mor_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_mor_deep_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-epoch mor apply (deep segment stack, no compaction) then a full
-    read — exercises the LATE-MATERIALIZED mor resolve (r3): winners
-    reduced over narrow (url,lsn,seq), payload joined back broadcast,
+    read — exercises the LATE-MATERIALIZED mor resolve: one broadcast
+    anti join against narrow (url,lsn,seq,file) candidates, payload
     never shuffled. Final state is epoch-split-invariant, so the same
     sequential-LWW oracle as cdc_merge_upsert applies."""
     from pyspark.sql import types as T

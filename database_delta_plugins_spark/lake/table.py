@@ -53,12 +53,19 @@ import os
 import re
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SYSTEM_COLS = ["_lsn", "_seq", "_is_deleted", "_ingest_ms"]
+_SYSTEM_FIELDS = [
+    T.StructField("_lsn", T.LongType(), True),
+    T.StructField("_seq", T.LongType(), True),
+    T.StructField("_is_deleted", T.BooleanType(), False),
+    T.StructField("_ingest_ms", T.LongType(), True),
+]
 
 _WIDEN_OK = {("int", "bigint"), ("float", "double"), ("int", "double")}
 
@@ -217,16 +224,7 @@ class LakeTable:
         ])
 
     def full_schema(self) -> T.StructType:
-        s = self.schema()
-        return T.StructType(
-            list(s.fields)
-            + [
-                T.StructField("_lsn", T.LongType(), True),
-                T.StructField("_seq", T.LongType(), True),
-                T.StructField("_is_deleted", T.BooleanType(), False),
-                T.StructField("_ingest_ms", T.LongType(), True),
-            ]
-        )
+        return T.StructType(list(self.schema().fields) + _SYSTEM_FIELDS)
 
     def committed_epochs(self) -> dict:
         return self.snap["epochs"]
@@ -321,47 +319,80 @@ class LakeTable:
     def bucket_expr(self, col) -> F.Column:
         return F.pmod(F.xxhash64(col), F.lit(self.num_buckets)).cast("int")
 
+    def _read_files(self, rels: list[str], schema: T.StructType) -> DataFrame:
+        """The one reader of committed data files. The schema comes from
+        the snapshot, never from parquet footers: ``spark.read.parquet``
+        without one runs a footer-inference job per call, a fixed cost
+        that dominated short reads."""
+        return self.spark.read.schema(schema).parquet(
+            *[f"{self.path}/{p}" for p in rels])
+
+    def _read_group(self, snap: dict, sid: int, rels: list[str],
+                    target: list[dict], with_file: bool = False) -> DataFrame:
+        """Read files written under schema ``sid`` with that write-time
+        schema (+ system columns), projected onto ``target`` by field id:
+        rename is metadata-only, added columns null-fill, widened types
+        cast. ``with_file`` appends the source file path as ``_src_file``
+        (the mor resolve's tie-break)."""
+        written = snap["schemas"][str(sid)]
+        df = self._read_files(rels, T.StructType(
+            [T.StructField(f["name"], _type_from_str(f["type"]), True)
+             for f in written] + _SYSTEM_FIELDS))
+        old = {f["id"]: f for f in written}
+        cols = [
+            (F.col(old[f["id"]]["name"]) if f["id"] in old else F.lit(None))
+            .cast(f["type"]).alias(f["name"])
+            for f in sorted(target, key=lambda f: f["id"])
+        ] + [F.col(c) for c in SYSTEM_COLS]
+        if with_file:
+            cols.append(F.col("_metadata.file_path").alias("_src_file"))
+        return df.select(*cols)
+
     def scan(self, buckets: list[int] | None = None,
              version: int | None = None) -> DataFrame:
         """Internal scan: payload + system columns, tombstones included.
 
-        Schema-on-read: files written under older schema ids are projected
-        to the current schema by field id (rename = metadata-only; added
-        columns null-fill; widened types cast). Only the requested
-        buckets' files are read — manifest-level pruning, the analogue of
-        Iceberg partition pruning.
+        Schema-on-read: every file group is read with the schema the
+        snapshot recorded when it was written (no footer inference) and
+        projected to the current schema by field id (rename =
+        metadata-only; added columns null-fill; widened types cast). Only
+        the requested buckets' files are read — manifest-level pruning,
+        the analogue of Iceberg partition pruning.
 
-        Merge-on-read resolve is LATE-MATERIALIZED (r2 directive #1 —
-        "payload never enters the reduce exchange"): a bucket's stack is
-        BASE (segments[0], the compacted bulk) + DELTA (appended epoch
-        segments — small, ``compact()`` bounds the stack). Only keys
-        present in a delta segment can need resolution, so:
+        Merge-on-read resolve is LATE-MATERIALIZED — the payload never
+        enters an exchange. A bucket's stack is BASE (segments[0], the
+        compacted bulk) + DELTA (appended epoch segments — small,
+        ``compact()`` bounds the stack). Only keys present in a delta
+        segment can need resolution, so:
 
-          1. winner set w = max (key, _lsn, _seq) over delta rows ∪ the
-             base rows of delta keys — NARROW columns only; column
-             pruning reaches the parquet scans, the 4 KB html payload is
-             never read for the losing versions, let alone shuffled;
-          2. result = base rows whose key is NOT in w (broadcast ANTI
-             join — payload stays map-side) ∪ rows matching w (broadcast
-             INNER join on (key, _lsn, _seq)).
+          1. candidates C = the rows of the stack whose key appears in
+             the delta (a broadcast semi join on the delta's keys),
+             NARROW columns only — (key, _lsn, _seq, source file);
+             column pruning reaches the parquet scan, so the 4 KB html
+             payload of losing versions is never read;
+          2. result = rows of the stack with no row of C that has the
+             same key and orders strictly above them by (_lsn, _seq,
+             source file) — one broadcast ANTI join, payload map-side.
 
-        Zero payload shuffles — the Iceberg equality-delete read shape
-        (delete set broadcast as a scan filter). Sound because
-        (key, _lsn, _seq) is unique across a bucket's committed stack:
-        keys are unique per segment (_bucket_local_dedup) and an event
-        commits into exactly one segment (epoch fencing, A3). When the
-        manifest says the delta is too big to broadcast
-        (``properties.mor_resolve_broadcast_rows``, default 4M rows —
-        i.e. compaction is far behind), falls back to the one-shuffle
-        payload-wide max_by reduce."""
+        The source file path makes the order total: an at-least-once
+        source can commit the same (key, _lsn, _seq) into two segments
+        (a winning event re-delivered in a later epoch), and exactly one
+        copy survives. Keys are unique within a file (_bucket_local_dedup
+        collapses each segment to one row per key), so no two rows of a
+        key tie. Three jobs: two broadcast builds and the read itself
+        (Spark adds a file-listing job for a schema group of more files
+        than ``spark.sql.sources.parallelPartitionDiscovery.threshold``).
+        When the manifest says the delta is too big to broadcast
+        (``properties.mor_resolve_broadcast_rows``, default 4M delta rows
+        — C holds at most twice that; i.e. compaction is far behind),
+        falls back to the one-shuffle payload-wide max_by reduce."""
         snap = self.snap
         if version is not None and version != snap["version"]:
             snap = json.loads(self.io.read_text(f"{self.path}/_meta/v{version}.json"))
-        cur = {f["id"]: f for f in snap["schemas"][str(snap["current_schema_id"])]}
         self._prefetch_manifests(snap, buckets)
-        # group files by schema_id, split base (first segment per bucket)
-        # vs delta (appended epoch segments)
-        base_groups: dict[int, list[str]] = {}
+        # group files by schema_id: every segment, and the delta alone
+        # (appended epoch segments — every segment after a bucket's first)
+        all_groups: dict[int, list[str]] = {}
         delta_groups: dict[int, list[str]] = {}
         delta_rows = 0
         delta_rows_unknown = False
@@ -369,88 +400,64 @@ class LakeTable:
             if buckets is not None and int(b) not in buckets:
                 continue
             for i, seg in enumerate(self._segments_of(info)):
-                dst = base_groups if i == 0 else delta_groups
-                dst.setdefault(seg["schema_id"], []).extend(
-                    f"{self.path}/{p}" for p in seg["files"]
-                )
-                if i > 0:
-                    # manifest row stats (None for legacy v2 segments).
-                    # A stat-less delta is UNSIZEABLE: counting it as 0
-                    # could broadcast an arbitrarily large delta (driver
-                    # OOM), so it forces the shuffle fallback instead.
-                    if seg.get("rows") is None:
-                        delta_rows_unknown = True
-                    else:
-                        delta_rows += seg["rows"]
-
-        def _read_groups(groups: dict[int, list[str]]) -> DataFrame | None:
-            parts = []
-            for sid, files in groups.items():
-                if not files:
+                all_groups.setdefault(seg["schema_id"], []).extend(seg["files"])
+                if i == 0:
                     continue
-                old = {f["id"]: f for f in snap["schemas"][str(sid)]}
-                df = self.spark.read.parquet(*files)
-                cols = []
-                for fid in sorted(cur):
-                    nf = cur[fid]
-                    if fid in old:
-                        cols.append(F.col(old[fid]["name"]).cast(nf["type"]).alias(nf["name"]))
-                    else:
-                        cols.append(F.lit(None).cast(nf["type"]).alias(nf["name"]))
-                cols += [F.col(c) for c in SYSTEM_COLS]
-                parts.append(df.select(*cols))
-            if not parts:
-                return None
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        base = _read_groups(base_groups)
-        delta = _read_groups(delta_groups)
-        if base is None and delta is None:
-            return self.spark.createDataFrame([], self.full_schema())
-        if delta is None:
-            return base
-        if base is None:
-            base, delta = delta, None
-            return self._resolve_lww_shuffle(base, snap["key"])
+                delta_groups.setdefault(seg["schema_id"], []).extend(seg["files"])
+                # manifest row stats (None for legacy v2 segments). A
+                # stat-less delta is UNSIZEABLE: counting it as 0 could
+                # broadcast an arbitrarily large delta (driver OOM), so it
+                # forces the shuffle fallback instead.
+                if seg.get("rows") is None:
+                    delta_rows_unknown = True
+                else:
+                    delta_rows += seg["rows"]
         limit = int(self.snap.get("properties", {}).get(
             "mor_resolve_broadcast_rows", 4_000_000))
-        if delta_rows_unknown or delta_rows > limit:
-            return self._resolve_lww_shuffle(base.unionByName(delta), snap["key"])
-        return self._resolve_lww_broadcast(base, delta, snap["key"])
+        broadcast = not (delta_rows_unknown or delta_rows > limit)
+        target = snap["schemas"][str(snap["current_schema_id"])]
+
+        def _read_groups(groups: dict[int, list[str]],
+                         with_file: bool) -> DataFrame | None:
+            parts = [self._read_group(snap, sid, rels, target, with_file)
+                     for sid, rels in groups.items() if rels]
+            return reduce(DataFrame.unionByName, parts) if parts else None
+
+        has_delta = any(delta_groups.values())
+        rows = _read_groups(all_groups, with_file=has_delta and broadcast)
+        if rows is None:
+            return self.spark.createDataFrame([], self.full_schema())
+        if not has_delta:
+            return rows
+        if broadcast:
+            delta_keys = _read_groups(delta_groups, with_file=False)
+            return self._resolve_lww_broadcast(rows, delta_keys, snap["key"])
+        return self._resolve_lww_shuffle(rows, snap["key"])
 
     @staticmethod
-    def _resolve_lww_broadcast(base: DataFrame, delta: DataFrame,
+    def _resolve_lww_broadcast(rows: DataFrame, delta: DataFrame,
                                key: str) -> DataFrame:
-        """Late-materialized mor resolve (see scan): narrow winner set,
-        broadcast anti/inner joins, payload never shuffled."""
-        ord_s = F.struct(F.col("_lsn"), F.col("_seq"))
-        dn = delta.select(key, "_lsn", "_seq")
-        dkeys = dn.select(key).distinct()
-        bn = base.select(key, "_lsn", "_seq").join(F.broadcast(dkeys), key, "semi")
-        w = (
-            dn.unionByName(bn)
-            .groupBy(key)
-            .agg(F.max(F.struct(F.col("_lsn"), F.col("_seq"))).alias("_w"))
-            .select(F.col(key).alias("_w_k"), F.col("_w"))
+        """Late-materialized mor resolve (see scan): one narrow candidate
+        set, one broadcast anti join, payload never shuffled."""
+        order = ["_lsn", "_seq", "_src_file"]
+        cand = (
+            rows.select(key, *order)
+            .join(F.broadcast(delta.select(key)), key, "semi")
+            .select(F.col(key).alias("_c_key"),
+                    F.struct(*order).alias("_c_order"))
         )
-        wb = F.broadcast(w)
-        untouched = base.join(wb, base[key] == F.col("_w_k"), "left_anti")
-        both = base.unionByName(delta)
-        resolved = (
-            both.join(wb, (both[key] == F.col("_w_k")) & (ord_s == F.col("_w")),
-                      "inner")
-            .select(*both.columns)
-        )
-        return untouched.unionByName(resolved)
+        return rows.join(
+            F.broadcast(cand),
+            (F.col(key) == F.col("_c_key"))
+            & (F.col("_c_order") > F.struct(*order)),
+            "left_anti",
+        ).drop("_src_file")
 
     def _resolve_lww_shuffle(self, out: DataFrame, key: str) -> DataFrame:
         """Fallback mor resolve: one payload-wide shuffle with map-side
         partial combine (max_by over the full struct). Used when the
         delta exceeds the broadcast budget — compaction has fallen far
-        behind — or when a bucket has no base (legacy edge)."""
+        behind — or has no row stats to size it by."""
         others = [c for c in out.columns if c != key]
         winner = F.max_by(
             F.struct(*[F.col(c) for c in others]),
@@ -660,7 +667,7 @@ class LakeTable:
 
         In ``mor`` mode the same end state is produced lazily: the batch's
         winners (tombstones included) append as a segment and the
-        WHEN-MATCHED resolution happens in scan()'s read-time LWW reduce —
+        WHEN-MATCHED resolution happens in scan()'s read-time LWW resolve —
         so ``rows_updated``/``conflicts_lost`` read 0 in mor lineage (the
         conflicts haven't been *observed* yet; compact() materializes them).
 
@@ -1315,10 +1322,11 @@ class LakeTable:
         # column-pruned scan of the changed buckets' old files, paid
         # only on hazardous windows; the declared feed query and the
         # in-order streaming path never trigger it.
-        exact_probe = None
         has_rewrite = any(_is_rewrite(p) for ps in groups.values() for p in ps)
-        if (lo is not None and (has_rewrite or is_cow)
-                and self._frontier_filter_unsound(since_version, to_version, lo)):
+        exact = (lo is not None and (has_rewrite or is_cow)
+                 and self._frontier_filter_unsound(since_version, to_version, lo))
+        exact_probe = None
+        if exact:
             probe_buckets = (list(s_from["buckets"]) if any(
                 p.startswith("data/rebucket-")
                 for ps in groups.values() for p in ps)
@@ -1330,46 +1338,35 @@ class LakeTable:
                     continue
                 for seg in self._segments_of(finfo):
                     old_files.update(seg["files"])
+            # no old files = no old rows: the exact path suppresses
+            # nothing. One read spans every write-time schema id because
+            # it reads only _lsn/_seq, system columns whose name and type
+            # no schema evolution changes.
             if old_files:
                 exact_probe = (
-                    self.spark.read.parquet(
-                        *[f"{self.path}/{x}" for x in sorted(old_files)])
+                    self._read_files(sorted(old_files),
+                                     T.StructType(_SYSTEM_FIELDS[:2]))
                     .select(F.col("_lsn").alias("_probe_lsn"),
                             F.col("_seq").alias("_probe_seq")))
-        cur = {f["id"]: f for f in fields}
         parts = []
         for sid, paths in groups.items():
-            old = {f["id"]: f for f in s_to["schemas"][str(sid)]}
-            cols = []
-            for fid in sorted(cur):
-                nf = cur[fid]
-                if fid in old:
-                    cols.append(F.col(old[fid]["name"]).cast(nf["type"]).alias(nf["name"]))
-                else:
-                    cols.append(F.lit(None).cast(nf["type"]).alias(nf["name"]))
             for plist, filtered in (
                 ([x for x in paths if not _is_rewrite(x)], is_cow),
                 ([x for x in paths if _is_rewrite(x)], True),
             ):
                 if not plist:
                     continue
-                df = self.spark.read.parquet(
-                    *[f"{self.path}/{x}" for x in sorted(plist)])
-                df = df.select(*cols, "_lsn", "_seq", "_is_deleted")
-                if filtered and lo is not None:
-                    if exact_probe is not None:
-                        df = df.join(
-                            exact_probe,
-                            F.col("_lsn").eqNullSafe(F.col("_probe_lsn"))
-                            & F.col("_seq").eqNullSafe(F.col("_probe_seq")),
-                            "left_anti")
-                    else:
-                        df = df.filter(F.col("_lsn") > lo)
+                df = self._read_group(s_to, sid, sorted(plist), fields)
+                if filtered and exact_probe is not None:
+                    df = df.join(
+                        exact_probe,
+                        F.col("_lsn").eqNullSafe(F.col("_probe_lsn"))
+                        & F.col("_seq").eqNullSafe(F.col("_probe_seq")),
+                        "left_anti")
+                elif filtered and lo is not None and not exact:
+                    df = df.filter(F.col("_lsn") > lo)
                 parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.select(
+        return reduce(DataFrame.unionByName, parts).select(
             *names, "_lsn", "_seq",
             F.when(F.col("_is_deleted"), F.lit("delete"))
             .otherwise(F.lit("upsert")).alias("_change_type"))

@@ -2,6 +2,7 @@
 order-independence, schema evolution, concurrency guard."""
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -416,3 +417,87 @@ def test_cdf_incremental_consumer_converges(spark, tmp_path):
         last_v = t.version
         table_state = {r["url"]: r["text"] for r in t.read().collect()}
         assert downstream == table_state, f"diverged after epoch {e}"
+
+
+@pytest.mark.parametrize("props", [None, {"mor_resolve_broadcast_rows": 0}],
+                         ids=["broadcast", "shuffle"])
+def test_mor_redelivered_winner_reads_once(spark, tmp_path, props):
+    """An at-least-once source can commit the same (url, _lsn, _seq) in
+    two epochs — base + delta, or two deltas. The mor resolve orders
+    rows totally (source file breaks the tie), so read() returns one
+    row per url on both the broadcast and the over-budget shuffle path."""
+    t = LakeTable.create(spark, str(tmp_path / "t_redeliver"), SCHEMA,
+                         key="url", num_buckets=2, write_mode="mor",
+                         properties=props)
+    a = ("a", "v1", "en", "I", 5, 0)
+    c = ("c", "x1", "fr", "I", 8, 0)
+    for e, rows in enumerate([[a, ("b", "w1", "de", "I", 6, 0)],
+                              [("b", "w2", "de", "U", 7, 0), c],
+                              [a, c]]):
+        t.merge(_upd(spark, rows), epoch_id=e, lww_strategy="sort")
+        t = t.refresh()
+    assert max(len(s) for s in t.segments_map().values()) == 3
+    assert sorted((r["url"], r["text"]) for r in t.read().collect()) == [
+        ("a", "v1"), ("b", "w2"), ("c", "x1")]
+    assert t.scan().count() == 3
+
+
+def test_changes_exact_when_since_snapshot_has_no_files(spark, tmp_path):
+    """The frontier was advanced past an epoch's lsns on a table with no
+    files (record_epoch(max_lsn) on an idle table), so the `_lsn > lo`
+    filter is unsound for that epoch. With no old files there is nothing
+    to suppress: changes() returns every row the epoch applied."""
+    t = _mk(spark, tmp_path, "t_cdf_idle")
+    t.record_epoch("idle", max_lsn=100)
+    t = t.refresh()
+    v0 = t.version
+    t.merge(_upd(spark, [("a", "v1", "en", "I", 5, 0),
+                         ("b", None, None, "D", 6, 0)]), epoch_id=1)
+    t = t.refresh()
+    ch = {r["url"]: r["_change_type"] for r in t.changes(v0).collect()}
+    assert ch == {"a": "upsert", "b": "delete"}
+
+
+def _jobs_run(spark, action) -> int:
+    """Number of Spark jobs ``action`` runs (counted by job group)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mor_read_job_count(spark, tmp_path):
+    """A mor point lookup over a 3-deep stack whose segments span two
+    schema ids runs at most 3 jobs (two broadcast builds + the read; no
+    footer-inference job), and a one-commit change feed runs 1."""
+    t = _mk(spark, tmp_path, "t_jobs", write_mode="mor")
+    keys = [f"k{i}" for i in range(12)]
+    t.merge(_upd(spark, [(k, "v1", "en", "I", i + 1, 0)
+                         for i, k in enumerate(keys)]), epoch_id=1)
+    t = t.refresh()
+    t.merge(_upd(spark, [(k, "v2", "en", "U", 100 + i, 0)
+                         for i, k in enumerate(keys[:6])]), epoch_id=2)
+    t = t.refresh()
+    t.apply_ddl({"action": "add_column", "name": "n", "type": "int"}, lsn=150)
+    t = t.refresh()
+    t.merge(_upd(spark, [(k, "v3", "en", "U", 200 + i, 0)
+                         for i, k in enumerate(keys[::2])])
+            .withColumn("n", F.lit(3)), epoch_id=3)
+    t = t.refresh()
+    assert max(len(s) for s in t.segments_map().values()) >= 3
+    assert len({s["schema_id"] for segs in t.segments_map().values()
+                for s in segs}) == 2
+
+    got = []
+    n = _jobs_run(spark, lambda: got.extend(
+        t.read().filter(F.col("url").isin("k0", "k1", "k7")).collect()))
+    assert n <= 3, f"point lookup ran {n} jobs"
+    assert sorted((r["url"], r["text"], r["n"]) for r in got) == [
+        ("k0", "v3", 3), ("k1", "v2", None), ("k7", "v1", None)]
+    n = _jobs_run(spark, lambda: t.changes(t.version - 1, t.version).collect())
+    assert n == 1, f"changes() ran {n} jobs"

@@ -148,8 +148,10 @@ def main():
                    not re.search(r"Exchange hashpartitioning[^\n]*(text|html)", p8)))
 
     # 9. mor scan late-materialized resolve: with a multi-segment stack,
-    # payload never enters the reduce exchange — every Exchange carries
-    # only narrow (key,_lsn,_seq); resolve joins are broadcast.
+    # payload never enters an exchange — every Exchange carries only
+    # narrow (key,_lsn,_seq,source file); the resolve is one broadcast
+    # anti join over a candidate set built with one broadcast semi join:
+    # at most 2 BroadcastExchange nodes, no hash-partitioned Exchange.
     import shutil as _sh
     import tempfile as _tf
 
@@ -187,10 +189,14 @@ def main():
                     exch9.append(lines9[j])
                     break
     sections.append(("mor scan: late-materialized LWW resolve", q9, p9))
-    checks.append(("mor scan: payload never enters the reduce exchange",
+    checks.append(("mor scan: payload never enters an exchange",
                    bool(exch9) and not any("text#" in ln for ln in exch9)))
     checks.append(("mor scan: resolve joins are broadcast",
                    "BroadcastHashJoin" in p9))
+    n_bx9 = sum(bool(re.match(r"\(\d+\) BroadcastExchange", ln.strip()))
+                for ln in lines9)
+    checks.append(("mor scan: at most 2 broadcast builds, no hash exchange",
+                   1 <= n_bx9 <= 2 and "Exchange hashpartitioning" not in p9))
     _sh.rmtree(mordir, ignore_errors=True)
 
     # 10. cow merge: untouched target rows ride a broadcast ANTI join
