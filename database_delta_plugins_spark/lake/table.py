@@ -59,13 +59,20 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-SYSTEM_COLS = ["_lsn", "_seq", "_is_deleted", "_ingest_ms"]
+# _commit_version is row lineage (Iceberg v3 _last_updated_sequence_number,
+# Delta row_commit_version): the version of the commit that last CHANGED
+# the row; rewrites (cow carry-over, compact, rebucket) keep it. Null on
+# rows written before the column existed (see row_lineage_from).
+SYSTEM_COLS = ["_lsn", "_seq", "_is_deleted", "_ingest_ms", "_commit_version"]
 _SYSTEM_FIELDS = [
     T.StructField("_lsn", T.LongType(), True),
     T.StructField("_seq", T.LongType(), True),
     T.StructField("_is_deleted", T.BooleanType(), False),
     T.StructField("_ingest_ms", T.LongType(), True),
+    T.StructField("_commit_version", T.LongType(), True),
 ]
+# segment body of a bucket whose commit wrote no file
+_NO_FILES = {"files": [], "rows": 0, "min_lsn": None, "max_lsn": None}
 
 _WIDEN_OK = {("int", "bigint"), ("float", "double"), ("int", "double")}
 
@@ -516,6 +523,11 @@ class LakeTable:
         # mode (the reference's one-replicator-per-source contract, C7)
         # keeps the recovery: with one writer the artifact can only be
         # OUR OWN prior crash.
+        #
+        # row_lineage_from: the first version whose data files all carry
+        # _commit_version — 0 for a new table, the first commit after the
+        # upgrade for an older one. changes() refuses windows before it.
+        snap.setdefault("row_lineage_from", v)
         body = json.dumps(snap)
         try:
             self.io.put_if_absent(target, body)
@@ -837,14 +849,13 @@ class LakeTable:
             # _write_snapshot is the single commit-conflict point; a losing
             # writer's orphan data dir is never referenced by any snapshot.
             commit_rel = f"data/commit-{new_version}-{uuid.uuid4().hex[:8]}"
-            commit_dir = f"{self.path}/{commit_rel}"
             t0 = time.time()
             (
                 result.drop("_took_update", "_matched")
                 .repartition(max(len(affected), 1), "_bucket")
                 .write.partitionBy("_bucket")
                 .mode("errorifexists")
-                .parquet(commit_dir)
+                .parquet(f"{self.path}/{commit_rel}")
             )
             t_write = time.time() - t0
         finally:
@@ -852,13 +863,13 @@ class LakeTable:
                 upd_persisted.unpersist()
 
         g = obs.get
-        per_bucket, footer_affected = self._bucket_stats_from_footers(commit_dir)
+        per_bucket = self._commit_segments(commit_rel)
         # cow keeps the pre-write affected list; the footer-derived set
         # must be a subset (empty buckets write no file) — assert the
         # invariant instead of silently diverging (ADVICE r4)
-        if not set(footer_affected) <= set(affected):
+        if not set(per_bucket) <= set(affected):
             raise RuntimeError(
-                f"cow commit wrote buckets {sorted(set(footer_affected) - set(affected))} "
+                f"cow commit wrote buckets {sorted(set(per_bucket) - set(affected))} "
                 "outside the affected set — bucket routing diverged")
         lsns = [b["min_lsn"] for b in per_bucket.values()
                 if b["min_lsn"] is not None]
@@ -874,7 +885,6 @@ class LakeTable:
         }
         return self._finalize_commit(
             eid=eid, new_version=new_version, affected=affected,
-            commit_rel=commit_rel, commit_dir=commit_dir,
             per_bucket=per_bucket, totals=totals,
             phase_sec={"lww": round(t_lww, 2), "join_stats": 0.0,
                        "write": round(t_write, 2)},
@@ -916,6 +926,8 @@ class LakeTable:
             F.when(take_u, F.col("u._u_seq")).otherwise(F.col("t._seq")).alias("_seq"),
             F.when(take_u, F.col("u._u_deleted")).otherwise(F.col("t._is_deleted")).alias("_is_deleted"),
             F.when(take_u, F.col("u._u_ingest_ms")).otherwise(F.col("t._ingest_ms")).alias("_ingest_ms"),
+            F.when(take_u, F.lit(self.version + 1).cast("long"))
+            .otherwise(F.col("t._commit_version")).alias("_commit_version"),
             take_u.alias("_took_update"),
             (F.col(f"u.{key}").isNotNull() & F.col("t._t_key").isNotNull()).alias("_matched"),
         )
@@ -924,7 +936,7 @@ class LakeTable:
             un = untouched.select(
                 F.col("_t_key").alias(key),
                 *[F.col(c) for c in payload_names if c != key],
-                "_lsn", "_seq", "_is_deleted", "_ingest_ms",
+                *SYSTEM_COLS,
                 F.lit(False).alias("_took_update"),
                 F.lit(False).alias("_matched"),
             ).withColumn("_bucket", self.bucket_expr(F.col(key)))
@@ -939,6 +951,7 @@ class LakeTable:
         the write via observe(); per-bucket segment stats (rows, _lsn
         min/max) come from the written parquet footers."""
 
+        new_version = self.version + 1
         result = upd.select(
             F.col(key),
             *[F.col(c) for c in payload_names if c != key],
@@ -946,6 +959,7 @@ class LakeTable:
             F.col("_u_seq").alias("_seq"),
             F.col("_u_deleted").alias("_is_deleted"),
             F.col("_u_ingest_ms").alias("_ingest_ms"),
+            F.lit(new_version).cast("long").alias("_commit_version"),
             F.col("_bucket"),
         )
         if not pre_partitioned:
@@ -965,20 +979,18 @@ class LakeTable:
             F.max("_lsn").alias("max_lsn"),
             F.sum(F.col("_is_deleted").cast("long")).alias("tombstones"),
         )
-        new_version = self.version + 1
         commit_rel = f"data/commit-{new_version}-{uuid.uuid4().hex[:8]}"
-        commit_dir = f"{self.path}/{commit_rel}"
         t0 = time.time()
         from database_delta_plugins_spark.common import job_desc
         with job_desc(self.spark, f"mor-merge-write epoch={eid}"):
             (
                 result.write.partitionBy("_bucket")
                 .mode("errorifexists")
-                .parquet(commit_dir)
+                .parquet(f"{self.path}/{commit_rel}")
             )
         t_write = time.time() - t0
         g = obs.get
-        per_bucket, affected = self._bucket_stats_from_footers(commit_dir)
+        per_bucket = self._commit_segments(commit_rel)
         totals = {
             "rows_applied": int(g["rows"]),
             # mor appends winners without observing the target: matched/
@@ -991,8 +1003,7 @@ class LakeTable:
             "max_lsn": int(g["max_lsn"]) if g["max_lsn"] is not None else None,
         }
         return self._finalize_commit(
-            eid=eid, new_version=new_version, affected=affected,
-            commit_rel=commit_rel, commit_dir=commit_dir,
+            eid=eid, new_version=new_version, affected=sorted(per_bucket),
             per_bucket=per_bucket, totals=totals,
             phase_sec={"lww": 0.0, "join_stats": 0.0, "write": round(t_write, 2)},
             extra_lineage=extra_lineage, append_segments=True)
@@ -1020,21 +1031,21 @@ class LakeTable:
             .drop("_is_dup")
         )
 
-    def _bucket_stats_from_footers(self, commit_dir: str
-                                   ) -> tuple[dict[int, dict], list[int]]:
-        """Per-bucket (rows, _lsn min/max) from the written files' parquet
-        footers — driver-side metadata reads, no second data pass. The
-        Iceberg analogue: manifests carry per-file column stats emitted
-        at write time. Footers are fetched CONCURRENTLY (r6): this runs
-        once per commit on the driver — a serial per-epoch section — and
-        at num_buckets=32 the sequential loop cost ~0.2-0.4 s/epoch
-        locally (worse on an object store at ~50-100 ms/GET); a thread
-        pool makes it one round-trip-time deep, the same trade as
-        ``_prefetch_manifests``."""
+    def _commit_segments(self, commit_rel: str) -> dict[int, dict]:
+        """The one listing of a commit directory's data files: per bucket,
+        the segment body — its files (sorted, table-relative) plus rows
+        and _lsn min/max from their parquet footers (driver-side metadata
+        reads, no second data pass; the Iceberg analogue is manifests
+        carrying per-file column stats emitted at write time). Footers
+        are fetched CONCURRENTLY (r6): this runs once per commit on the
+        driver — a serial per-epoch section — and at num_buckets=32 the
+        sequential loop cost ~0.2-0.4 s/epoch locally (worse on an object
+        store at ~50-100 ms/GET); a thread pool makes it one
+        round-trip-time deep, the same trade as ``_prefetch_manifests``."""
         import pyarrow.parquet as pq
 
-        def _file_stats(path: str) -> tuple[int, int | None, int | None]:
-            md = pq.ParquetFile(path).metadata
+        def _file_stats(rel: str) -> tuple[int, int | None, int | None]:
+            md = pq.ParquetFile(f"{self.path}/{rel}").metadata
             mn = mx = None
             for rg in range(md.num_row_groups):
                 row_group = md.row_group(rg)
@@ -1048,27 +1059,26 @@ class LakeTable:
                         mx = st.max if mx is None else max(mx, st.max)
             return md.num_rows, mn, mx
 
+        commit_dir = f"{self.path}/{commit_rel}"
         jobs: list[tuple[int, str]] = []
         for entry in sorted(os.listdir(commit_dir)):
             if not entry.startswith("_bucket="):
                 continue
             b = int(entry.split("=", 1)[1])
-            bdir = os.path.join(commit_dir, entry)
-            jobs.extend((b, os.path.join(bdir, fn))
-                        for fn in os.listdir(bdir) if fn.endswith(".parquet"))
+            jobs.extend((b, f"{commit_rel}/{entry}/{fn}")
+                        for fn in sorted(os.listdir(f"{commit_dir}/{entry}"))
+                        if fn.endswith(".parquet"))
         if len(jobs) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(16, len(jobs))) as ex:
                 stats = list(ex.map(lambda j: _file_stats(j[1]), jobs))
         else:
-            stats = [_file_stats(p) for _, p in jobs]
+            stats = [_file_stats(rel) for _, rel in jobs]
         per_bucket: dict[int, dict] = {}
-        for (b, _p), (rows, mn, mx) in zip(jobs, stats):
-            if not rows:
-                continue
-            cur = per_bucket.setdefault(
-                b, {"rows": 0, "min_lsn": None, "max_lsn": None})
+        for (b, rel), (rows, mn, mx) in zip(jobs, stats):
+            cur = per_bucket.setdefault(b, {**_NO_FILES, "files": []})
+            cur["files"].append(rel)
             cur["rows"] += rows
             if mn is not None:
                 cur["min_lsn"] = (int(mn) if cur["min_lsn"] is None
@@ -1076,31 +1086,19 @@ class LakeTable:
             if mx is not None:
                 cur["max_lsn"] = (int(mx) if cur["max_lsn"] is None
                                   else max(cur["max_lsn"], int(mx)))
-        return per_bucket, sorted(per_bucket)
+        return per_bucket
 
     def _finalize_commit(self, *, eid: str | None, new_version: int,
-                         affected: list[int], commit_rel: str, commit_dir: str,
-                         per_bucket: dict[int, dict], totals: dict,
-                         phase_sec: dict, extra_lineage: dict | None,
+                         affected: list[int], per_bucket: dict[int, dict],
+                         totals: dict, phase_sec: dict,
+                         extra_lineage: dict | None,
                          append_segments: bool) -> dict:
         # manifest update: cow replaces the bucket's segment stack with
         # the merged segment; mor appends the batch segment to the stack.
         snap = json.loads(json.dumps(self.snap))
         for b in affected:
-            bdir = f"{commit_dir}/_bucket={b}"
-            files = sorted(
-                f"{commit_rel}/_bucket={b}/{fn}"
-                for fn in (os.listdir(bdir) if os.path.isdir(bdir) else [])
-                if fn.endswith(".parquet")
-            )
-            st = per_bucket.get(int(b))
-            segment = {
-                "files": files,
-                "schema_id": snap["current_schema_id"],
-                "rows": st["rows"] if st else 0,
-                "min_lsn": st["min_lsn"] if st else None,
-                "max_lsn": st["max_lsn"] if st else None,
-            }
+            segment = {"schema_id": snap["current_schema_id"],
+                       **per_bucket.get(int(b), _NO_FILES)}
             if append_segments and str(b) in snap["buckets"]:
                 segs = list(self._segments_of(snap["buckets"][str(b)])) + [segment]
             else:
@@ -1161,28 +1159,6 @@ class LakeTable:
             return []
         return [json.loads(ln) for ln in body.splitlines() if ln.strip()]
 
-    def _frontier_filter_unsound(self, since_version: int, to_version: int,
-                                 lo: int) -> bool:
-        """Could ``changes()``'s ``_lsn > lo`` rewrite filter drop a real
-        change in ``(since_version, to_version]``? True iff some data
-        commit inside the window may carry rows at or below ``lo`` —
-        the out-of-lsn-order commit regime. Reads the append-only
-        lineage sidecar rather than ``snap['epochs']``: the sidecar is
-        never trimmed and records eid-less commits too, so long windows
-        and direct-API merges are covered. A record without ``min_lsn``
-        (maintenance entries carry no rows and are skipped via
-        ``rows_applied``) is treated as unsound — conservative."""
-        for rec in self.lineage_log():
-            v = rec.get("committed_version")
-            if v is None or not (since_version < v <= to_version):
-                continue
-            if not rec.get("rows_applied"):
-                continue
-            mn = rec.get("min_lsn")
-            if mn is None or mn <= lo:
-                return True
-        return False
-
     def record_epoch(self, epoch_id: str | int, note: str = "skipped",
                      max_lsn: int | None = None) -> dict:
         """Metadata-only epoch fence: commits a zero-row record so a
@@ -1217,12 +1193,15 @@ class LakeTable:
         downstream consumer can incrementally follow the table without
         re-reading it.
 
-        Implementation is manifest-only: diff the two snapshots' file
-        sets (O(metadata), no data pass) and read just the NEW files.
-        Compaction rewrites old rows into new files; those artifacts are
-        filtered by the lsn frontier of ``since_version`` — any row at or
-        below it was already visible. Works for both write modes (mor
-        appends segments; cow rewrites whole buckets)."""
+        Manifest diff + row lineage: diff the two snapshots' file sets
+        (O(metadata), no data pass), read just the NEW files, and keep
+        the rows whose ``_commit_version`` is above ``since_version``.
+        Every rewrite (cow carry-over, compaction, rebucket) keeps a
+        row's stored version, so rows that were already visible at
+        ``since_version`` drop out whatever their lsn and whatever the
+        commit order — exact in both write modes. Windows reaching back
+        before ``row_lineage_from`` (files written before the column
+        existed) are refused."""
         if to_version is None:
             to_version = self.version
         if since_version > to_version:
@@ -1232,11 +1211,6 @@ class LakeTable:
             if v == self.snap["version"]:
                 return self.snap
             return json.loads(self.io.read_text(f"{self.path}/_meta/v{v}.json"))
-
-        def _frontier(s: dict) -> int | None:
-            eps = s.get("epochs", {}).values()
-            return max((e["max_lsn"] for e in eps
-                        if e.get("max_lsn") is not None), default=None)
 
         s_from, s_to = _snap_at(since_version), _snap_at(to_version)
         # a purge-compaction inside the window dropped tombstone rows —
@@ -1252,6 +1226,17 @@ class LakeTable:
                 "events inside the window were physically removed. Read "
                 f"from version >= {lp}, or compact without purge_tombstones "
                 "when a CDF consumer is behind.")
+        # files written before row lineage carry no _commit_version: in a
+        # window that starts before row_lineage_from a null could be a
+        # real change, so refuse rather than guess. Inside an allowed
+        # window a null is always an old carried-over row.
+        rl = s_to.get("row_lineage_from")
+        if rl is None or since_version < rl:
+            raise ValueError(
+                f"changes({since_version}, {to_version}) reaches before row "
+                f"lineage (version {rl}): older data files carry no "
+                "_commit_version. Read from a version written after the "
+                "upgrade.")
         fields = s_to["schemas"][str(s_to["current_schema_id"])]
         names = [f["name"] for f in fields]
         out_schema = T.StructType(
@@ -1287,89 +1272,14 @@ class LakeTable:
                         groups.setdefault(seg["schema_id"], []).append(p)
         if not groups:
             return self.spark.createDataFrame([], out_schema)
-        # The lsn-frontier filter exists to drop REWRITE artifacts —
-        # previously-visible rows copied into new files. It must apply
-        # ONLY to such files: the unconditional filter silently DROPPED
-        # real changes whenever epochs committed out of lsn order
-        # (tied-mtime file sources measurably do — r5, found by the
-        # streaming index refresher). Origin is exact from the file
-        # path: compaction writes data/compact-*, rebucket writes
-        # data/rebucket-* (disjoint from merge's data/commit-*), so the
-        # discriminator needs no snapshot stamp and covers rewrites
-        # predating the last_rewrite_version marker. cow merge files
-        # (data/commit-*) also carry old rows by construction, so cow
-        # filters everything and therefore still assumes lsn-ordered
-        # epoch commits; mor merge files are pure appends — exact
-        # regardless of order.
-        def _is_rewrite(rel: str) -> bool:
-            return rel.startswith(("data/compact-", "data/rebucket-"))
-
-        is_cow = s_to.get("write_mode", "cow") == "cow"
-        lo = _frontier(s_from)
-        # The frontier filter is exact only when every data commit
-        # INSIDE the window wrote rows strictly above lo. Out-of-order
-        # regimes break that: a low-lsn epoch committed in-window whose
-        # commit files a same-window compaction/rebucket absorbed has
-        # the rewrite artifact as its rows' ONLY carrier, and the
-        # `_lsn > lo` filter would silently drop those real changes
-        # (cow merge files carry old rows by construction, so cow hits
-        # the same hole without any rewrite). Detect that from the
-        # append-only lineage sidecar (never trimmed, covers eid-less
-        # commits, every data commit records min_lsn); when unsound,
-        # fall back to the exact discriminator: a row in a filtered
-        # file is OLD iff its (_lsn, _seq) — unique per applied event —
-        # was already present in since_version's files. Costs one
-        # column-pruned scan of the changed buckets' old files, paid
-        # only on hazardous windows; the declared feed query and the
-        # in-order streaming path never trigger it.
-        has_rewrite = any(_is_rewrite(p) for ps in groups.values() for p in ps)
-        exact = (lo is not None and (has_rewrite or is_cow)
-                 and self._frontier_filter_unsound(since_version, to_version, lo))
-        exact_probe = None
-        if exact:
-            probe_buckets = (list(s_from["buckets"]) if any(
-                p.startswith("data/rebucket-")
-                for ps in groups.values() for p in ps)
-                else [str(b) for b in changed])
-            old_files: set[str] = set()
-            for b in probe_buckets:
-                finfo = s_from["buckets"].get(b)
-                if finfo is None:
-                    continue
-                for seg in self._segments_of(finfo):
-                    old_files.update(seg["files"])
-            # no old files = no old rows: the exact path suppresses
-            # nothing. One read spans every write-time schema id because
-            # it reads only _lsn/_seq, system columns whose name and type
-            # no schema evolution changes.
-            if old_files:
-                exact_probe = (
-                    self._read_files(sorted(old_files),
-                                     T.StructType(_SYSTEM_FIELDS[:2]))
-                    .select(F.col("_lsn").alias("_probe_lsn"),
-                            F.col("_seq").alias("_probe_seq")))
-        parts = []
-        for sid, paths in groups.items():
-            for plist, filtered in (
-                ([x for x in paths if not _is_rewrite(x)], is_cow),
-                ([x for x in paths if _is_rewrite(x)], True),
-            ):
-                if not plist:
-                    continue
-                df = self._read_group(s_to, sid, sorted(plist), fields)
-                if filtered and exact_probe is not None:
-                    df = df.join(
-                        exact_probe,
-                        F.col("_lsn").eqNullSafe(F.col("_probe_lsn"))
-                        & F.col("_seq").eqNullSafe(F.col("_probe_seq")),
-                        "left_anti")
-                elif filtered and lo is not None and not exact:
-                    df = df.filter(F.col("_lsn") > lo)
-                parts.append(df)
-        return reduce(DataFrame.unionByName, parts).select(
-            *names, "_lsn", "_seq",
-            F.when(F.col("_is_deleted"), F.lit("delete"))
-            .otherwise(F.lit("upsert")).alias("_change_type"))
+        parts = [self._read_group(s_to, sid, sorted(paths), fields)
+                 for sid, paths in groups.items()]
+        return (
+            reduce(DataFrame.unionByName, parts)
+            .filter(F.col("_commit_version") > since_version)
+            .select(*names, "_lsn", "_seq",
+                    F.when(F.col("_is_deleted"), F.lit("delete"))
+                    .otherwise(F.lit("upsert")).alias("_change_type")))
 
     # -------------------------------------------------------- maintenance
     def compact(self, max_segments_per_bucket: int = 1,
@@ -1379,7 +1289,10 @@ class LakeTable:
         (tombstones preserved by default — they must keep suppressing
         late arrivals). For mor tables this bounds read-time reduce
         fan-in; at 100 TB it is the scheduled maintenance job (Iceberg
-        rewrite_data_files analogue).
+        rewrite_data_files analogue). The rewrite is ``scan()`` output,
+        so every row keeps its ``_commit_version``: a ``changes()``
+        window spanning the compaction reads the new files and emits
+        none of their already-visible rows.
 
         ``purge_tombstones``: physically drop tombstone rows whose _lsn
         is at or below the committed replay frontier (last_committed_lsn)
@@ -1397,7 +1310,6 @@ class LakeTable:
         if purge_tombstones:
             frontier = self.last_committed_lsn()
             if frontier is not None:
-        
                 cond = F.col("_is_deleted") & (F.col("_lsn") <= F.lit(frontier))
                 # purge count rides the write via observe() — ONE job,
                 # no separate existence probe re-running the whole
@@ -1409,12 +1321,11 @@ class LakeTable:
                 df = df.filter(~cond)
         new_version = self.version + 1
         commit_rel = f"data/compact-{new_version}-{uuid.uuid4().hex[:8]}"
-        commit_dir = f"{self.path}/{commit_rel}"
         (
             df.repartition(max(len(over), 1), "_bucket")
             .write.partitionBy("_bucket")
             .mode("errorifexists")
-            .parquet(commit_dir)
+            .parquet(f"{self.path}/{commit_rel}")
         )
         # only claim a purge (and poison CDF windows across this
         # version) when tombstone rows were ACTUALLY dropped — a routine
@@ -1422,31 +1333,13 @@ class LakeTable:
         # changes() consumers to resync
         purged = bool(purge_obs is not None
                       and int(purge_obs.get["purged"] or 0) > 0)
+        per_bucket = self._commit_segments(commit_rel)
         snap = json.loads(json.dumps(self.snap))
         for b in over:
-            bdir = f"{commit_dir}/_bucket={b}"
-            files = sorted(
-                f"{commit_rel}/_bucket={b}/{fn}"
-                for fn in (os.listdir(bdir) if os.path.isdir(bdir) else [])
-                if fn.endswith(".parquet")
-            )
-            old_segments = self._segments_of(snap["buckets"][str(b)])
             snap["buckets"][str(b)] = self._write_manifest(new_version, b, [{
-                "files": files,
                 "schema_id": snap["current_schema_id"],
-                "rows": None,
-                "min_lsn": min((s["min_lsn"] for s in old_segments
-                                if s["min_lsn"] is not None), default=None),
-                "max_lsn": max((s["max_lsn"] for s in old_segments
-                                if s["max_lsn"] is not None), default=None),
-            }])
+                **per_bucket.get(b, _NO_FILES)}])
         snap["version"] = new_version
-        # informational stamp: the last version whose commit rewrote
-        # previously-visible rows. changes() does NOT read it — rewrite
-        # artifacts are discriminated by file-path origin (data/compact-*,
-        # data/rebucket-*), which also covers rewrites predating this
-        # marker (ADVICE r5: the old comment overstated its role)
-        snap["last_rewrite_version"] = new_version
         if purged:
             # ADVICE r2: a purge physically drops delete tombstones whose
             # file was the ONLY carrier of _change_type='delete' for the
@@ -1470,10 +1363,9 @@ class LakeTable:
 
         The rewrite itself is one full-table pass (read LWW-resolved
         state -> hash on the new bucket expr -> partitioned write), the
-        same cost class as a full compaction; changes() windows spanning
-        the rebucket are safe — rewritten rows sit at-or-below the lsn
-        frontier of any pre-rebucket snapshot and are filtered exactly
-        like compaction artifacts."""
+        same cost class as a full compaction. Like compaction it writes
+        ``scan()`` output, so rows keep their ``_commit_version`` and a
+        ``changes()`` window spanning the rebucket emits none of them."""
         new_num_buckets = int(new_num_buckets)
         if new_num_buckets < 1:
             raise ValueError(f"num_buckets must be >= 1, got {new_num_buckets}")
@@ -1487,34 +1379,19 @@ class LakeTable:
             F.pmod(F.xxhash64(F.col(self.key)), F.lit(new_num_buckets)).cast("int"))
         new_version = self.version + 1
         commit_rel = f"data/rebucket-{new_version}-{uuid.uuid4().hex[:8]}"
-        commit_dir = f"{self.path}/{commit_rel}"
         (
             df.repartition(new_num_buckets, "_bucket")
             .write.partitionBy("_bucket")
             .mode("errorifexists")
-            .parquet(commit_dir)
+            .parquet(f"{self.path}/{commit_rel}")
         )
-        per_bucket, affected = self._bucket_stats_from_footers(commit_dir)
         snap = json.loads(json.dumps(self.snap))
         snap["num_buckets"] = new_num_buckets
-        snap["buckets"] = {}
-        for b in affected:
-            bdir = f"{commit_dir}/_bucket={b}"
-            files = sorted(
-                f"{commit_rel}/_bucket={b}/{fn}"
-                for fn in (os.listdir(bdir) if os.path.isdir(bdir) else [])
-                if fn.endswith(".parquet")
-            )
-            st = per_bucket[int(b)]
-            snap["buckets"][str(b)] = self._write_manifest(new_version, b, [{
-                "files": files,
-                "schema_id": snap["current_schema_id"],
-                "rows": st["rows"],
-                "min_lsn": st["min_lsn"],
-                "max_lsn": st["max_lsn"],
-            }])
+        snap["buckets"] = {
+            str(b): self._write_manifest(new_version, b, [{
+                "schema_id": snap["current_schema_id"], **seg}])
+            for b, seg in self._commit_segments(commit_rel).items()}
         snap["version"] = new_version
-        snap["last_rewrite_version"] = new_version   # full-table rewrite
         self._write_snapshot(snap)
         self._append_lineage({
             "epoch_id": None, "committed_version": new_version,

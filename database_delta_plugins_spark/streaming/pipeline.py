@@ -666,9 +666,8 @@ class CDCPipeline:
         if compacted and self.post_epoch_hooks:
             # pass 2, AFTER compaction: advances each refresher's cursor
             # past the rewrite version in a window that contains ONLY
-            # the compaction commit (no real changes to lose to the
-            # rewrite filter); the NEXT epoch's window then starts above
-            # the rewrite and stays exact
+            # the compaction commit, so the NEXT epoch's window starts
+            # above the rewrite and does not re-read its files
             _run_hooks()
         self.epoch_lineage.extend(out)
         if self.listener is not None:

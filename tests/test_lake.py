@@ -194,7 +194,7 @@ def test_time_travel_across_schema_evolution(spark, tmp_path):
 def test_change_feed_between_versions(spark, tmp_path):
     """CDF read: changes(since) returns exactly the rows applied after
     `since` — upserts and deletes typed, compaction artifacts excluded by
-    the lsn frontier, schema evolution projected by field id."""
+    their commit version, schema evolution projected by field id."""
     t = _mk(spark, tmp_path, "t_cdf", write_mode="mor")
     t.merge(_upd(spark, [("a", "v1", "en", "I", 1, 0),
                          ("b", "w1", "de", "I", 2, 0)]), epoch_id=1)
@@ -209,11 +209,15 @@ def test_change_feed_between_versions(spark, tmp_path):
     assert ch["a"]["_change_type"] == "upsert" and ch["a"]["text"] == "v2"
     assert ch["b"]["_change_type"] == "delete"
     assert ch["c"]["_lsn"] == 5
-    # compaction rewrites old rows into new files; the frontier filter
-    # keeps them out of the NEXT window's feed
+    # compaction rewrites old rows into new files; they keep their commit
+    # version, which keeps them out of the NEXT window's feed
     v2 = t.version
+    lineage = {r["url"]: r["_commit_version"] for r in t.scan().collect()}
+    assert lineage == {"a": v2, "b": v2, "c": v2}
     t.compact(max_segments_per_bucket=1)
     t = t.refresh()
+    assert {r["url"]: r["_commit_version"]
+            for r in t.scan().collect()} == lineage
     t.merge(_upd(spark, [("d", "y1", "en", "I", 6, 0)]), epoch_id=3)
     t = t.refresh()
     ch2 = [r["url"] for r in t.changes(v2).collect()]
@@ -336,6 +340,11 @@ def test_cow_merge_untouched_rows_broadcast_anti(spark, tmp_path):
     state = {r["url"]: r["text"] for r in t.read().collect()}
     assert state["k0"] == "V0" and "k1" not in state and state["new"] == "n1"
     assert len(state) == 50  # 49 originals + new
+    # rows that took the update carry the merge's version; rewritten
+    # target rows keep version 1
+    lineage = {r["url"]: r["_commit_version"] for r in t.scan().collect()}
+    assert lineage == {**{f"k{i}": 1 for i in range(2, 50)},
+                       "k0": 2, "k1": 2, "new": 2}
 
     # plan shape: anti/semi of target vs broadcast keys
     upd_shaped = _upd(spark, upd1).select(
@@ -353,6 +362,8 @@ def test_cow_merge_untouched_rows_broadcast_anti(spark, tmp_path):
     # fallback path: budget 0 -> full_outer over the scan, same state
     t2, rec2 = _fill("t_cowf", mor_resolve_broadcast_rows=0)
     assert {r["url"]: r["text"] for r in t2.read().collect()} == state
+    assert {r["url"]: r["_commit_version"]
+            for r in t2.scan().collect()} == lineage
     assert rec2["rows_updated"] == rec["rows_updated"]
     assert rec2["tombstones"] == rec["tombstones"]
 
@@ -501,3 +512,103 @@ def test_mor_read_job_count(spark, tmp_path):
         ("k0", "v3", 3), ("k1", "v2", None), ("k7", "v1", None)]
     n = _jobs_run(spark, lambda: t.changes(t.version - 1, t.version).collect())
     assert n == 1, f"changes() ran {n} jobs"
+
+
+def test_changes_exact_after_crash_before_lineage_append(spark, tmp_path,
+                                                         monkeypatch):
+    """A crash between the snapshot put (the commit point) and the
+    lineage sidecar append leaves a committed version the sidecar never
+    heard of. changes() must not depend on the sidecar: an out-of-lsn-
+    order cow epoch committed that way still shows its rows."""
+    t = _mk(spark, tmp_path, "t_crash_lineage", num_buckets=1)
+    t.merge(_upd(spark, [("a", "a1", "en", "I", 100, 0),
+                         ("b", "b1", "de", "I", 101, 0)]), epoch_id=1)
+    t = t.refresh()
+    v1 = t.version
+
+    def _crash(self, lineage):
+        raise RuntimeError("crash after the snapshot put")
+
+    monkeypatch.setattr(LakeTable, "_append_lineage", _crash)
+    with pytest.raises(RuntimeError, match="crash after the snapshot put"):
+        t.merge(_upd(spark, [("c", "c1", "fr", "I", 1, 0),
+                             ("d", "d1", "es", "I", 2, 0)]), epoch_id=2)
+    monkeypatch.undo()
+    t = LakeTable.load(spark, t.path)
+    assert t.version == v1 + 1
+    assert all(r.get("committed_version") != t.version
+               for r in t.lineage_log())
+    ch = {r["url"]: (r["_lsn"], r["_change_type"])
+          for r in t.changes(v1).collect()}
+    assert ch == {"c": (1, "upsert"), "d": (2, "upsert")}
+
+
+def _strip_row_lineage(t) -> None:
+    """Rewrite a table as code from before row lineage left it: data
+    files without _commit_version, snapshots without row_lineage_from."""
+    import pyarrow.parquet as pq
+
+    for root, _dirs, files in os.walk(os.path.join(t.path, "data")):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                p = os.path.join(root, fn)
+                pq.write_table(pq.ParquetFile(p).read().drop(["_commit_version"]), p)
+                # the local Hadoop filesystem verifies a sibling checksum
+                crc = os.path.join(root, f".{fn}.crc")
+                if os.path.exists(crc):
+                    os.remove(crc)
+    meta = os.path.join(t.path, "_meta")
+    for fn in os.listdir(meta):
+        if fn.startswith("v") and fn.endswith(".json"):
+            with open(os.path.join(meta, fn)) as f:
+                snap = json.load(f)
+            snap.pop("row_lineage_from")
+            with open(os.path.join(meta, fn), "w") as f:
+                json.dump(snap, f)
+
+
+@pytest.mark.parametrize("write_mode", ["mor", "cow"])
+def test_changes_legacy_files_without_row_lineage(spark, tmp_path, write_mode):
+    """A table written before row lineage has no _commit_version in its
+    files. Its first new commit sets row_lineage_from; changes() refuses
+    windows before it and is exact from it onward, also after a
+    compaction carries the null-version rows into new files."""
+    t = _mk(spark, tmp_path, f"t_legacy_{write_mode}", num_buckets=1,
+            write_mode=write_mode)
+    t.merge(_upd(spark, [("a", "a1", "en", "I", 1, 0),
+                         ("b", "b1", "de", "I", 2, 0),
+                         ("e", "e1", "fr", "I", 3, 0)]), epoch_id=1)
+    _strip_row_lineage(t)
+    t = LakeTable.load(spark, t.path)
+    v_old = t.version
+    assert "row_lineage_from" not in t.snap
+    with pytest.raises(ValueError, match="row lineage"):
+        t.changes(0, v_old)
+
+    t.merge(_upd(spark, [("a", "a2", "en", "U", 4, 0),
+                         ("c", "c1", "es", "I", 5, 0)]), epoch_id=2)
+    t = t.refresh()
+    v_new = t.version
+    assert t.snap["row_lineage_from"] == v_new
+    for since in (0, v_old):
+        with pytest.raises(ValueError, match="row lineage"):
+            t.changes(since)
+    assert t.changes(v_new).count() == 0
+
+    t.merge(_upd(spark, [("b", None, None, "D", 6, 0),
+                         ("d", "d1", "it", "I", 7, 0)]), epoch_id=3)
+    t = t.refresh()
+    v3 = t.version
+    want = {"b": (6, "delete"), "d": (7, "upsert")}
+
+    def _feed(since):
+        return {r["url"]: (r["_lsn"], r["_change_type"])
+                for r in t.changes(since).collect()}
+
+    assert _feed(v_new) == want
+    t.compact(max_segments_per_bucket=0)
+    t = t.refresh()
+    lineage = {r["url"]: r["_commit_version"] for r in t.scan().collect()}
+    assert lineage == {"a": v_new, "b": v3, "c": v_new, "d": v3, "e": None}
+    assert _feed(v_new) == want
+    assert _feed(v3) == {}

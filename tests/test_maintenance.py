@@ -383,9 +383,13 @@ def test_rebucket(spark, tmp_path):
     v_pre = t.version
     state_pre = t.read().orderBy("url").collect()
 
+    lineage_pre = {r["url"]: r["_commit_version"] for r in t.scan().collect()}
     res = t.rebucket(16)
     assert res["rebucketed"] and res["num_buckets"] == 16
     t = t.refresh()
+    # the rewrite keeps each row's commit version
+    assert {r["url"]: r["_commit_version"]
+            for r in t.scan().collect()} == lineage_pre
     assert t.num_buckets == 16
     assert t.read().orderBy("url").collect() == state_pre
     # tombstone survived the rewrite with its lsn
@@ -395,8 +399,8 @@ def test_rebucket(spark, tmp_path):
     # time travel: the pre-rebucket snapshot still reads (old manifests)
     assert t.read(version=v_pre).orderBy("url").collect() == state_pre
 
-    # CDF across the rebucket: only genuinely-new rows appear (rewrite
-    # artifacts are filtered by the lsn frontier)
+    # CDF across the rebucket: only genuinely-new rows appear (rewritten
+    # rows keep a commit version at or below the window start)
     v_rb = t.version
     t.merge(_upd(spark, [("d", "y1", "es", "I", 6, 0)]), epoch_id=3)
     t = t.refresh()
@@ -500,9 +504,8 @@ def test_changes_exact_when_compaction_absorbs_out_of_order_epoch(spark, tmp_pat
     commits inside the CDF window, then a same-window compaction absorbs
     its commit files — the compact-* artifact becomes the rows' only
     carrier, and the `_lsn > lo` rewrite filter used to silently drop
-    those real changes. changes() must detect the unsound window from
-    the lineage sidecar and fall back to the exact (_lsn,_seq)
-    anti-join against the since-snapshot's files."""
+    those real changes. Row lineage keeps them: the compacted rows carry
+    the _commit_version of the epoch that wrote them."""
     t = LakeTable.create(spark, str(tmp_path / "t_ooo"), SCHEMA, key="url",
                          num_buckets=1, write_mode="mor")
     t.merge(_upd(spark, [("a", "a1", "en", "I", 100, 0),
@@ -521,16 +524,16 @@ def test_changes_exact_when_compaction_absorbs_out_of_order_epoch(spark, tmp_pat
     assert set(ch) == {"c", "d"}, ch
     assert ch["c"]["_lsn"] == 1 and ch["d"]["_lsn"] == 2
     assert all(r["_change_type"] == "upsert" for r in ch.values())
-    # the in-order window (v0 -> v1) stays on the sound fast path
-    assert not t._frontier_filter_unsound(0, v1, 0)
+    # the in-order window (v0 -> v1) is exact too
+    assert {r["url"] for r in t.changes(0, v1).collect()} == {"a", "b"}
 
 
 def test_changes_cow_out_of_order_epoch_not_dropped(spark, tmp_path):
     """cow merge files carry previously-visible rows by construction, so
-    changes() lsn-filters ALL new files — which dropped every row of an
-    out-of-lsn-order epoch (no rewrite needed). The exact anti-join
-    fallback must emit the low-lsn inserts and still suppress the
-    rewritten old rows sharing the same files."""
+    a filter on lsn dropped every row of an out-of-lsn-order epoch (no
+    rewrite needed). changes() must emit the low-lsn inserts and still
+    suppress the rewritten old rows sharing the same files, which keep
+    the _commit_version of the epoch that wrote them."""
     t = _mk(spark, tmp_path, "t_cow_ooo", num_buckets=1)
     t.merge(_upd(spark, [("a", "a1", "en", "I", 100, 0),
                          ("b", "b1", "de", "I", 101, 0)]), epoch_id=1)
@@ -544,3 +547,7 @@ def test_changes_cow_out_of_order_epoch_not_dropped(spark, tmp_path):
     # with lsns ABOVE the naive filter and must still be suppressed
     assert set(ch) == {"c", "d"}, ch
     assert ch["c"]["_lsn"] == 1 and ch["d"]["_lsn"] == 2
+    # the merge touched the bucket but not keys a, b: their rows were
+    # rewritten with their original commit version
+    assert {r["url"]: r["_commit_version"] for r in t.scan().collect()} == {
+        "a": v1, "b": v1, "c": t.version, "d": t.version}

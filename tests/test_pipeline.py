@@ -1026,9 +1026,9 @@ def test_streaming_index_refresh_across_compaction(spark, sf_dir, tmp_path):
     Multi-table mode with compact_every=2 exercises (a) the compaction
     loop over table PATHS (it iterated config dicts and crashed), (b)
     the post-compaction hook pass that advances the refresher's cursor
-    past each rewrite, and (c) changes()'s origin-based rewrite filter
-    (compact-* files lsn-filtered, commit-* appends never). Final index
-    must be row-identical to a rebuild."""
+    past each rewrite, and (c) changes() over windows holding compact-*
+    files (rewritten rows keep their commit version). Final index must
+    be row-identical to a rebuild."""
     from database_delta_plugins_spark.operators.dedup import (
         _minhash_index_rows,
         minhash_index_build,
@@ -1063,10 +1063,13 @@ def test_streaming_index_refresh_across_compaction(spark, sf_dir, tmp_path):
     p.run_to_completion()
 
     t = LakeTable.load(spark, tpath)
-    # compaction really ran mid-stream (rewrite version stamped, and
-    # later epochs appended above it)
-    lr = t.snap.get("last_rewrite_version")
-    assert lr is not None and lr < t.version
+    # compaction really ran mid-stream (its files are referenced, and
+    # later commits landed above it)
+    compact_versions = [int(f.split("-")[1])
+                        for segs in t.segments_map().values()
+                        for seg in segs for f in seg["files"]
+                        if f.startswith("data/compact-")]
+    assert compact_versions and max(compact_versions) < t.version
     final = t.read().select("url", "text")
     want = _minhash_index_rows(final, "url", "text", 3, 8, 64)
     got = index_read(spark, idx).select("url", "band", "band_hash", "_bk")
