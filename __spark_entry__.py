@@ -119,11 +119,10 @@ def q_cdc_apply_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_merge_upsert(spark: SparkSession, sf_dir: str,
-                       write_mode: str = "cow",
-                       lww_strategy: str = "late") -> DataFrame:
+                       write_mode: str = "cow") -> DataFrame:
     """A1/A3 through the REAL engine: two-epoch key-bucketed MERGE into a
     LakeTable, then read back final state. Incremental apply must equal
-    the one-shot LWW oracle (both write modes / LWW strategies share it)."""
+    the one-shot LWW oracle (both write modes share it)."""
     from pyspark.sql import types as T
 
     from database_delta_plugins_spark.lake.table import LakeTable
@@ -151,9 +150,9 @@ def q_cdc_merge_upsert(spark: SparkSession, sf_dir: str,
     t = LakeTable.create(spark, tmp, schema, key="url", num_buckets=8,
                          write_mode=write_mode)
     mid = upd.agg(F.expr("percentile_approx(lsn, 0.5)")).collect()[0][0]
-    t.merge(upd.filter(F.col("lsn") <= mid), epoch_id=1, lww_strategy=lww_strategy)
+    t.merge(upd.filter(F.col("lsn") <= mid), epoch_id=1)
     t = t.refresh()
-    t.merge(upd.filter(F.col("lsn") > mid), epoch_id=2, lww_strategy=lww_strategy)
+    t.merge(upd.filter(F.col("lsn") > mid), epoch_id=2)
     t = t.refresh()
     return (
         t.scan()
@@ -163,11 +162,11 @@ def q_cdc_merge_upsert(spark: SparkSession, sf_dir: str,
 
 
 def q_cdc_merge_mor_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming apply path's exact configuration — merge-on-read
-    segments + single-exchange bucket-sort LWW — against the same
-    sequential-apply oracle as the cow/late variant."""
-    return q_cdc_merge_upsert(spark, sf_dir, write_mode="mor",
-                              lww_strategy="sort")
+    """The merge-on-read variant of cdc_merge_upsert — winners append as
+    segments and resolve at read time — against the same sequential-apply
+    oracle. (The name predates the removal of the bucket-sort winner
+    strategy; the query key is kept because the gate names it.)"""
+    return q_cdc_merge_upsert(spark, sf_dir, write_mode="mor")
 
 
 def q_cdc_mor_deep_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,7 +204,7 @@ def q_cdc_mor_deep_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         a = lo + e * step
         b = hi if e == n_epochs - 1 else lo + (e + 1) * step - 1
         t.merge(upd.filter((F.col("lsn") >= a) & (F.col("lsn") <= b)),
-                epoch_id=e + 1, lww_strategy="sort")
+                epoch_id=e + 1)
         t = t.refresh()
     return (
         t.scan()
@@ -242,10 +241,10 @@ def q_cdc_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
                          write_mode="mor")
     mid = upd.agg(
         F.floor((F.min("lsn") + F.max("lsn")) / 2).cast("long")).collect()[0][0]
-    t.merge(upd.filter(F.col("lsn") <= mid), epoch_id=1, lww_strategy="sort")
+    t.merge(upd.filter(F.col("lsn") <= mid), epoch_id=1)
     t = t.refresh()
     v1 = t.version
-    t.merge(upd.filter(F.col("lsn") > mid), epoch_id=2, lww_strategy="sort")
+    t.merge(upd.filter(F.col("lsn") > mid), epoch_id=2)
     t = t.refresh()
     return t.changes(v1).select(
         "url", "text", "lang", F.col("_lsn").alias("lsn"), "_change_type")

@@ -644,9 +644,9 @@ class LakeTable:
     # ---------------------------------------------------------------- merge
     def merge(self, updates: DataFrame, epoch_id: str | int | None = None,
               extra_lineage: dict | None = None,
-              transform=None, lww_strategy: str = "late") -> dict:
+              transform=None, salt_buckets: int = 64) -> dict:
         """MERGE the update batch into the table — see _merge_inner for
-        the full semantics (LWW strategies, tombstones, epoch fencing,
+        the full semantics (LWW reduce, tombstones, epoch fencing,
         transform contract). This wrapper only scopes AQE off."""
         # AQE scoped OFF for the merge plan (restored after): every join
         # here is either an explicit broadcast (winners) or 1:1 on the
@@ -658,13 +658,13 @@ class LakeTable:
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             return self._merge_inner(updates, epoch_id, extra_lineage,
-                                     transform, lww_strategy)
+                                     transform, salt_buckets)
         finally:
             self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     def _merge_inner(self, updates: DataFrame, epoch_id: str | int | None,
                      extra_lineage: dict | None,
-                     transform, lww_strategy: str) -> dict:
+                     transform, salt_buckets: int) -> dict:
         """Key-partitioned copy-on-write MERGE (SURVEY.md §2.4 A1-A3).
 
         ``updates`` columns: <payload per current schema> + op_type(I|U|D)
@@ -695,22 +695,8 @@ class LakeTable:
         semantically identical and costs O(winners), not O(batch). At
         bench skew (~240 revisions/key) that is a ~200x compute cut.
 
-        ``lww_strategy`` (mor only; cow always uses "late"):
-
-        * ``"late"`` — salted tiny reduce over (key, lsn, seq), winners
-          broadcast back (operators/lww.py::lww_reduce_late). Payload
-          bytes shuffled: WINNERS only. Right when the dedup ratio is
-          high (winner set ≪ batch) or shuffle fabric is the bottleneck;
-          costs one extra narrow scan + a serial driver broadcast build.
-        * ``"sort"`` — winner selection, replay dedup AND the bucket
-          write share ONE exchange: hash-repartition the full batch on
-          _bucket, window-sort (key, lsn DESC, seq DESC) within buckets
-          (the dynamic-partition writer wants that sort anyway), keep
-          each key's first row. Zero extra scans, zero driver-serial
-          sections — fully parallel end to end. Payload bytes shuffled:
-          the whole batch, i.e. dedup_ratio × winner bytes. Right at
-          Common-Crawl-ish single-digit dedup ratios where that factor
-          is small and per-epoch driver latency dominates N->4N scaling.
+        ``salt_buckets``: stage-1 fan-out of the salted winner reduce
+        over (key, lsn, seq) (operators/lww.py::lww_reduce_late).
         """
         from database_delta_plugins_spark.operators.lww import lww_reduce_late
 
@@ -741,43 +727,22 @@ class LakeTable:
         upd = upd.select(key, *[c for c in payload_names if c != key],
                          "op_type", "lsn", "seq", "ts_ms")
 
-        pre_partitioned = False
-        if self.write_mode == "mor" and lww_strategy == "sort":
-            # A2 "sort" strategy: the bucket exchange the write needs
-            # anyway also performs winner selection + replay dedup — a
-            # window over the bucket partitioning (exchange REUSED, only
-            # a sort added, which the partitioned write wants too): rows
-            # sorted (key, lsn DESC, seq DESC) within buckets, each
-            # key's FIRST row is the LWW winner; ties (replayed events)
-            # collapse to one. One job, no scan re-read, no broadcast.
-            from pyspark.sql.window import Window
-
-            upd = upd.withColumn("_bucket", self.bucket_expr(F.col(key)))
-            upd = upd.repartition(self.num_buckets, "_bucket")
-            w = Window.partitionBy("_bucket").orderBy(
-                F.col(key), F.desc("lsn"), F.desc("seq"))
-            prev = F.lag(F.col(key)).over(w)
-            upd = (
-                upd.withColumn("_keep", prev.isNull() | (prev != F.col(key)))
-                .filter(F.col("_keep")).drop("_keep")
-            )
-            pre_partitioned = True
-        else:
-            # A2 "late" strategy: salted tiny reduce over (key, lsn, seq)
-            # only; payload joins back, broadcast when small. Skew-proof
-            # AND payload-shuffle-free. mor defers replay-duplicate
-            # removal to the bucket-partitioned write's max-per-key reduce
-            # (partition-local, exchange-reusing) — which also licenses
-            # the smaller hashed-key broadcast; cow dedups here, ahead of
-            # the target join, with the exact string-key broadcast.
-            mor = self.write_mode == "mor"
-            upd = lww_reduce_late(upd, key=key, dedup=not mor, hash_key=mor)
+        # A2: salted tiny reduce over (key, lsn, seq) only; the winners
+        # broadcast back onto the payload rows. Skew-proof AND
+        # payload-shuffle-free.
+        # mor defers replay-duplicate removal to the bucket-partitioned
+        # write's max-per-key reduce (partition-local, exchange-reusing)
+        # — which also licenses the smaller hashed-key broadcast; cow
+        # dedups here, ahead of the target join, with the exact
+        # string-key broadcast.
+        mor = self.write_mode == "mor"
+        upd = lww_reduce_late(upd, key=key, salt_buckets=salt_buckets,
+                              dedup=not mor, hash_key=mor)
         if transform is not None:
             upd = transform(upd)
             # re-assert the merge contract after user code
             upd = upd.select(key, *[c for c in payload_names if c != key],
-                             "op_type", "lsn", "seq", "ts_ms",
-                             *(["_bucket"] if pre_partitioned else []))
+                             "op_type", "lsn", "seq", "ts_ms")
 
         # shape the post-apply row for each winner
         upd = upd.select(
@@ -792,13 +757,10 @@ class LakeTable:
             F.col("seq").alias("_u_seq"),
             (F.col("op_type") == "D").alias("_u_deleted"),
             F.col("ts_ms").alias("_u_ingest_ms"),
-            *(["_bucket"] if pre_partitioned else []),
-        )
-        if not pre_partitioned:
-            upd = upd.withColumn("_bucket", self.bucket_expr(F.col(key)))
+        ).withColumn("_bucket", self.bucket_expr(F.col(key)))
 
         upd_persisted = None
-        if self.write_mode == "mor":
+        if mor:
             # LSM-style append: no target read/join — the batch's winners
             # become a new segment per bucket; reads resolve LWW across
             # the stack. Write cost O(batch) regardless of table size.
@@ -808,8 +770,7 @@ class LakeTable:
             # second pass, no persist, no separate stats job. Per-epoch
             # fixed job cost is what bounds streaming throughput.
             return self._merge_mor_commit(upd, key, payload_names, eid,
-                                          extra_lineage,
-                                          pre_partitioned=pre_partitioned)
+                                          extra_lineage)
         else:
             # persist: the shaped post-LWW updates feed both the
             # affected-bucket listing and the merge join — without this
@@ -886,8 +847,7 @@ class LakeTable:
         return self._finalize_commit(
             eid=eid, new_version=new_version, affected=affected,
             per_bucket=per_bucket, totals=totals,
-            phase_sec={"lww": round(t_lww, 2), "join_stats": 0.0,
-                       "write": round(t_write, 2)},
+            phase_sec={"lww": round(t_lww, 2), "write": round(t_write, 2)},
             extra_lineage=extra_lineage, append_segments=False)
 
     def _cow_merge_result(self, upd: DataFrame, tgt: DataFrame, key: str,
@@ -945,8 +905,7 @@ class LakeTable:
 
     def _merge_mor_commit(self, upd: DataFrame, key: str,
                           payload_names: list[str], eid: str | None,
-                          extra_lineage: dict | None,
-                          pre_partitioned: bool = False) -> dict:
+                          extra_lineage: dict | None) -> dict:
         """Merge-on-read commit in ONE Spark action: batch totals ride
         the write via observe(); per-bucket segment stats (rows, _lsn
         min/max) come from the written parquet footers."""
@@ -962,15 +921,13 @@ class LakeTable:
             F.lit(new_version).cast("long").alias("_commit_version"),
             F.col("_bucket"),
         )
-        if not pre_partitioned:
-            # ONE payload shuffle: hash-repartition on the bucket, then a
-            # partition-local dedup that REUSES that exchange (window over
-            # _bucket adds only a sort, which the partitioned write needs
-            # anyway) — replay duplicates of the winner event (same key,
-            # lsn, seq) are dropped without a second payload shuffle.
-            # (The "sort" strategy arrives already partitioned + deduped.)
-            result = result.repartition(self.num_buckets, "_bucket")
-            result = self._bucket_local_dedup(result, key)
+        # ONE payload shuffle: hash-repartition on the bucket, then a
+        # partition-local dedup that REUSES that exchange (window over
+        # _bucket adds only a sort, which the partitioned write needs
+        # anyway) — replay duplicates of the winner event (same key,
+        # lsn, seq) are dropped without a second payload shuffle.
+        result = result.repartition(self.num_buckets, "_bucket")
+        result = self._bucket_local_dedup(result, key)
         obs = Observation()
         result = result.observe(
             obs,
@@ -1005,7 +962,7 @@ class LakeTable:
         return self._finalize_commit(
             eid=eid, new_version=new_version, affected=sorted(per_bucket),
             per_bucket=per_bucket, totals=totals,
-            phase_sec={"lww": 0.0, "join_stats": 0.0, "write": round(t_write, 2)},
+            phase_sec={"write": round(t_write, 2)},
             extra_lineage=extra_lineage, append_segments=True)
 
     @staticmethod

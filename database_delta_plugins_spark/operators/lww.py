@@ -8,7 +8,7 @@ That equivalence holds because the apply semantics are key-local —
 the final state of a url depends only on the max-(lsn,seq) event for
 that url (UPDATE SET * semantics; deletes are tombstones).
 
-Two strategies, same result:
+Three reduces, same result:
 
 * ``lww_reduce`` — single-stage ``max_by(struct(payload), (lsn, seq))``.
   Hash aggregate with map-side partial combine: the hot-url skew is
@@ -18,8 +18,11 @@ Two strategies, same result:
 * ``lww_reduce_salted`` — explicit two-stage reduce for adversarial skew
   (one url dominating whole input splits): stage 1 reduces per
   (url, salt) with salt = pmod(xxhash64(lsn, seq), S) spreading one hot
-  key over S reducers; stage 2 reduces the S survivors per url. Used by
-  the streaming apply path per the north rule.
+  key over S reducers; stage 2 reduces the S survivors per url.
+
+* ``lww_reduce_late`` — the same salted two-stage reduce over ONLY
+  (key, lsn, seq), winners broadcast back to fetch payloads. This is the
+  one used by every ``LakeTable.merge`` (and so the streaming apply path).
 """
 
 from __future__ import annotations
@@ -51,7 +54,6 @@ def lww_reduce(df: DataFrame, key: str = "url",
 
 def lww_reduce_late(df: DataFrame, key: str = "url",
                     salt_buckets: int = 64,
-                    broadcast_winners: bool = True,
                     dedup: bool = True,
                     hash_key: bool = False,
                     hash_mod: int | None = None) -> DataFrame:
@@ -109,11 +111,8 @@ def lww_reduce_late(df: DataFrame, key: str = "url",
     # explicit broadcast: the winners' size can't be estimated through a
     # pandas-UDF projection, so without the hint Catalyst picks
     # sort-merge and SORTS the wide payload side — the exact thing this
-    # function exists to avoid. One winner row per key (~tens of bytes);
-    # disable only when distinct keys per batch exceed broadcast limits,
-    # which at that point should use lww_reduce_salted partitioned.
-    if broadcast_winners:
-        winners = F.broadcast(winners)
+    # function exists to avoid. One winner row per key (~tens of bytes).
+    winners = F.broadcast(winners)
     if hash_key:
         p1 = F.xxhash64(F.col(key))
         if hash_mod is not None:

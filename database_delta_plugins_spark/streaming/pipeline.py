@@ -90,7 +90,6 @@ class CDCPipeline:
         write_mode: str = "mor",
         compact_every: int = 8,
         database_base: str | None = None,
-        lww_strategy: str = "late",
         source_format: str = "parquet",
         binary_handling: str = "bytes",
         charset_columns: dict[str, str] | None = None,
@@ -100,29 +99,33 @@ class CDCPipeline:
         # (reference: RuntimeArguments.java:37-45 applied at
         # MySqlEventReader.java:135-138)
         if runtime_args:
-            from database_delta_plugins_spark.common import merge_pipeline_config
-
-            cfg = merge_pipeline_config(
-                {
-                    "max_files_per_trigger": max_files_per_trigger,
-                    "num_buckets": num_buckets,
-                    "salt_buckets": salt_buckets,
-                    "derive_text_from_html": derive_text_from_html,
-                    "normalize_lang": normalize_lang,
-                    "lww_strategy": lww_strategy,
-                    "source_format": source_format,
-                    "compact_every": compact_every,
-                    "binary_handling": binary_handling,
-                    "charset": "",
-                },
-                runtime_args,
+            from database_delta_plugins_spark.common import (
+                CONNECTOR_PREFIX,
+                merge_pipeline_config,
             )
+
+            defaults = {
+                "max_files_per_trigger": max_files_per_trigger,
+                "num_buckets": num_buckets,
+                "salt_buckets": salt_buckets,
+                "derive_text_from_html": derive_text_from_html,
+                "normalize_lang": normalize_lang,
+                "source_format": source_format,
+                "compact_every": compact_every,
+                "binary_handling": binary_handling,
+                "charset": "",
+            }
+            cfg = merge_pipeline_config(defaults, runtime_args)
+            # a removed knob or a typo must not be a silent no-op
+            unknown = sorted(set(cfg) - set(defaults))
+            if unknown:
+                raise ValueError("unknown runtime args: " + ", ".join(
+                    CONNECTOR_PREFIX + k for k in unknown))
             max_files_per_trigger = cfg["max_files_per_trigger"]
             num_buckets = cfg["num_buckets"]
             salt_buckets = cfg["salt_buckets"]
             derive_text_from_html = cfg["derive_text_from_html"]
             normalize_lang = cfg["normalize_lang"]
-            lww_strategy = cfg["lww_strategy"]
             source_format = cfg["source_format"]
             compact_every = cfg["compact_every"]
             binary_handling = cfg["binary_handling"]
@@ -188,15 +191,6 @@ class CDCPipeline:
         self.write_mode = write_mode
         self.compact_every = compact_every
         self.database_base = database_base
-        # LWW strategy (see LakeTable.merge). Measured at the bench's
-        # Common-Crawl shape (4.5 events/url, 4KB pages, 2.88M events):
-        # "late" 131.8k ev/s @local[4] vs "sort" 101.9k — the sort
-        # strategy's full-batch wide-row window sort costs more than the
-        # broadcast build it saves, so "late" is the default; "sort"
-        # remains for ratio≈1 insert-heavy streams where the winner set
-        # is the batch (broadcast would be huge) and for maximal N->4N
-        # wall-scaling (no driver-serial section: 0.738 vs 0.665 at 1->4).
-        self.lww_strategy = lww_strategy
         # binlog-shaped log encoding: "parquet" (columnar, footer-stats
         # audit fast path), "json" (Debezium-JSON-lines shape: one
         # envelope object per line, binary as base64 — the wire format a
@@ -337,7 +331,8 @@ class CDCPipeline:
                 .withColumn("seq", F.monotonically_increasing_id())
                 .withColumn("ts_ms", F.lit(None).cast("long"))
             )
-            t.merge(snap, epoch_id="snapshot", extra_lineage={"is_snapshot": True})
+            t.merge(snap, epoch_id="snapshot", extra_lineage={"is_snapshot": True},
+                    salt_buckets=self.salt_buckets)
             t = t.refresh()
         return t
 
@@ -746,7 +741,7 @@ class CDCPipeline:
                 rec = table.merge(
                     d,
                     epoch_id=seg_id,
-                    lww_strategy=self.lww_strategy,
+                    salt_buckets=self.salt_buckets,
                     transform=self._winner_transform,
                     extra_lineage={
                         "stream_epoch": str(epoch_id),

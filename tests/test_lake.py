@@ -289,7 +289,7 @@ def test_mor_scan_payload_never_shuffled(spark, tmp_path):
                              num_buckets=4, write_mode="mor",
                              properties=props or None)
         for i, rows in enumerate((rows1, rows2, rows3)):
-            t.merge(_upd(spark, rows), epoch_id=i + 1, lww_strategy="sort")
+            t.merge(_upd(spark, rows), epoch_id=i + 1)
             t = t.refresh()
         return t
 
@@ -337,6 +337,7 @@ def test_cow_merge_untouched_rows_broadcast_anti(spark, tmp_path):
 
     t, rec = _fill("t_cowb")
     assert rec["conflicts_lost"] == 0 and rec["rows_updated"] == 2
+    assert set(rec["phase_sec"]) == {"lww", "write"}
     state = {r["url"]: r["text"] for r in t.read().collect()}
     assert state["k0"] == "V0" and "k1" not in state and state["new"] == "n1"
     assert len(state) == 50  # 49 originals + new
@@ -418,7 +419,7 @@ def test_cdf_incremental_consumer_converges(spark, tmp_path):
     downstream: dict = {}
     last_v = t.version
     for e, rows in enumerate(epochs):
-        t.merge(_upd(spark, rows), epoch_id=e, lww_strategy="sort")
+        t.merge(_upd(spark, rows), epoch_id=e)
         t = t.refresh()
         for r in t.changes(last_v).collect():
             if r["_change_type"] == "delete":
@@ -445,8 +446,10 @@ def test_mor_redelivered_winner_reads_once(spark, tmp_path, props):
     for e, rows in enumerate([[a, ("b", "w1", "de", "I", 6, 0)],
                               [("b", "w2", "de", "U", 7, 0), c],
                               [a, c]]):
-        t.merge(_upd(spark, rows), epoch_id=e, lww_strategy="sort")
+        rec = t.merge(_upd(spark, rows), epoch_id=e)
         t = t.refresh()
+    # the mor winner reduce runs inside the write action: one timed phase
+    assert set(rec["phase_sec"]) == {"write"}
     assert max(len(s) for s in t.segments_map().values()) == 3
     assert sorted((r["url"], r["text"]) for r in t.read().collect()) == [
         ("a", "v1"), ("b", "w2"), ("c", "x1")]

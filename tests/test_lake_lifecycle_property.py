@@ -48,9 +48,7 @@ def test_lifecycle_random_epochs_compact_rebucket(spark, tmp_path):
             write_mode=rng.choice(["cow", "mor"]))
         applied = []
         for e, batch in enumerate(epochs):
-            strat = rng.choice(["late", "sort"]) if t.write_mode == "mor" else "late"
-            t.merge(spark.createDataFrame(batch, UPD), epoch_id=e,
-                    lww_strategy=strat)
+            t.merge(spark.createDataFrame(batch, UPD), epoch_id=e)
             t = t.refresh()
             applied.append((e, batch))
             r = rng.random()

@@ -2,6 +2,7 @@
 partitioning/ordering (the core semantic transplant from the reference's
 single-threaded total order, SURVEY.md §4)."""
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from database_delta_plugins_spark.operators.decode import decode_events
@@ -114,10 +115,11 @@ def test_lww_equals_sequential_apply_randomized(spark):
             assert visible == state, f"seed={seed} fn={reduce_fn.__name__}"
 
 
-def test_merge_sort_strategy_equals_late(spark, tmp_path):
-    """The two LWW merge strategies (late-materialized broadcast join vs
-    bucket-sort window) must produce identical final table state —
-    including replay duplicates collapsing and delete tombstones."""
+@pytest.mark.parametrize("write_mode", ["mor", "cow"])
+def test_merge_collapses_replay_dup_keeps_tombstone(spark, tmp_path, write_mode):
+    """Both write modes' merge picks one winner per key: an exact replay
+    duplicate of the winner event collapses to one row and a delete
+    winner lands as a tombstone."""
     from pyspark.sql import types as T
 
     from database_delta_plugins_spark.lake.table import LakeTable
@@ -132,18 +134,13 @@ def test_merge_sort_strategy_equals_late(spark, tmp_path):
             ("c", "x1", "I", 4, 0)]
     upd = spark.createDataFrame(
         rows, "url: string, text: string, op_type: string, lsn: long, seq: long")
-    out = {}
-    for strat in ("late", "sort"):
-        t = LakeTable.create(spark, str(tmp_path / f"t_{strat}"), schema,
-                             key="url", num_buckets=4, write_mode="mor")
-        t.merge(upd, epoch_id=1, lww_strategy=strat)
-        t = t.refresh()
-        out[strat] = sorted(
-            (r["url"], r["text"], r["_lsn"], r["_is_deleted"])
-            for r in t.scan().collect())
-    assert out["late"] == out["sort"]
-    assert out["sort"] == [("a", "v2", 3, False), ("b", None, 5, True),
-                           ("c", "x1", 4, False)]
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema,
+                         key="url", num_buckets=4, write_mode=write_mode)
+    t.merge(upd, epoch_id=1)
+    t = t.refresh()
+    assert sorted((r["url"], r["text"], r["_lsn"], r["_is_deleted"])
+                  for r in t.scan().collect()) == [
+        ("a", "v2", 3, False), ("b", None, 5, True), ("c", "x1", 4, False)]
 
 
 def test_lww_late_hashed_survives_primary_hash_collision(spark):

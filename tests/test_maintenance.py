@@ -319,7 +319,7 @@ def test_commit_metadata_is_o_touched_buckets(spark, tmp_path):
                          num_buckets=64, write_mode="mor", io=io)
     # spread epoch: populate all 64 buckets
     spread = [(f"u{i}", f"v{i}", "en", "I", i + 1, 0) for i in range(512)]
-    t.merge(_upd(spark, spread), epoch_id=0, lww_strategy="sort")
+    t.merge(_upd(spark, spread), epoch_id=0)
     t = LakeTable.load(spark, t.path, io=io)
     assert len(t.snap["buckets"]) == 64
 
@@ -331,7 +331,7 @@ def test_commit_metadata_is_o_touched_buckets(spark, tmp_path):
         b0 = io.bytes_written
         o0 = io.objects_written
         t.merge(_upd(spark, [("u0", f"w{e}", "en", "U", 1000 + e, 0)]),
-                epoch_id=e, lww_strategy="sort")
+                epoch_id=e)
         t = LakeTable.load(spark, t.path, io=io)
         # exactly 1 new manifest (+ snapshot + CURRENT hint)
         assert len(os.listdir(manifests_dir)) == n_manifests_before + 1

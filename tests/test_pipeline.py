@@ -5,6 +5,7 @@ import json
 import time
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from database_delta_plugins_spark.lake.table import LakeTable
@@ -81,6 +82,12 @@ def test_runtime_args_override(spark, tmp_path):
     assert p.max_files_per_trigger == 9
     assert p.normalize_lang is True
     assert p.num_buckets == 4
+    # an unknown knob (a typo, or one that no longer exists) is refused
+    # by name rather than silently changing nothing
+    with pytest.raises(ValueError, match="source.connector.salt_bucket"):
+        CDCPipeline(
+            spark, str(tmp_path / "log"), str(tmp_path / "t"), str(tmp_path / "c"),
+            runtime_args={"source.connector.salt_bucket": "8"})
 
 
 def test_metrics_listener(spark, sf_dir, tmp_path):
@@ -98,10 +105,21 @@ def test_metrics_listener(spark, sf_dir, tmp_path):
     spark.streams.removeListener(p.listener)
 
 
-def test_snapshot_then_tail(spark, sf_dir, tmp_path):
+def test_snapshot_then_tail(spark, sf_dir, tmp_path, monkeypatch):
     """S1: replicate_existing_data seeds epoch 'snapshot'; tail events
     with higher lsn override snapshot rows (C5 restart rule: re-running
-    bootstrap is fenced)."""
+    bootstrap is fenced). Both the snapshot merge and the tail merges
+    salt their winner reduce with the pipeline's salt_buckets."""
+    from database_delta_plugins_spark.operators import lww
+
+    salts = []
+    real_reduce = lww.lww_reduce_late
+
+    def spy(*args, **kwargs):
+        salts.append(kwargs.get("salt_buckets"))
+        return real_reduce(*args, **kwargs)
+
+    monkeypatch.setattr(lww, "lww_reduce_late", spy)
     log = str(tmp_path / "log3")
     write_event_log(spark, sf_dir, log, revs=2, n_files=2)
     snap = (
@@ -115,8 +133,10 @@ def test_snapshot_then_tail(spark, sf_dir, tmp_path):
             F.col("lang"),
         )
     )
-    p = CDCPipeline(spark, log, str(tmp_path / "t3"), str(tmp_path / "c3"), num_buckets=4)
+    p = CDCPipeline(spark, log, str(tmp_path / "t3"), str(tmp_path / "c3"),
+                    num_buckets=4, salt_buckets=8)
     t = p.bootstrap(replicate_existing_data=True, snapshot_df=snap)
+    assert salts == [8]
     assert t.read().filter(F.col("text").startswith("SNAP:")).count() == snap.count()
     # idempotent bootstrap (mid-snapshot crash restart)
     t = p.bootstrap(replicate_existing_data=True, snapshot_df=snap)
@@ -126,6 +146,7 @@ def test_snapshot_then_tail(spark, sf_dir, tmp_path):
     still_snap = t.read().filter(F.col("text").startswith("SNAP:")).count()
     assert still_snap < snap.count()
     assert t.read().count() > 0
+    assert len(salts) > 1 and set(salts) == {8}
 
 
 def test_ddl_blacklist_and_drop_rename(spark, sf_dir, tmp_path):

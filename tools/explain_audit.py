@@ -113,22 +113,36 @@ def main():
     checks.append(("IVF query fits no KMeans (no MLlib stage)",
                    "KMeans" not in p6 and "TreeAggregate" not in p6))
 
-    # 7. "sort" LWW merge shape: ONE payload exchange total (the bucket
-    # repartition), winner selection + dedup riding it as Window+Sort.
-    from pyspark.sql.window import Window
+    # 7. mor merge shape (LakeTable._merge_inner -> _merge_mor_commit):
+    # hashed-key late LWW, bucket repartition, bucket-local dedup. The
+    # winners reach the payload rows through a broadcast; the bucket
+    # repartition is the ONE hash exchange that carries payload columns
+    # (the winner reduce's exchanges carry only hashed keys + lsn/seq).
+    from database_delta_plugins_spark.lake.table import LakeTable
 
     d7 = decode.decode_events(rraw, before_key_only="url").filter(
         F.col("op_type").isNotNull())
-    d7 = d7.withColumn("_bucket", F.pmod(F.xxhash64("url"), F.lit(8)).cast("int"))
-    d7 = d7.repartition(8, "_bucket")
-    w7 = Window.partitionBy("_bucket").orderBy(F.col("url"), F.desc("lsn"), F.desc("seq"))
-    prev7 = F.lag(F.col("url")).over(w7)
-    q7 = d7.withColumn("_k", prev7.isNull() | (prev7 != F.col("url"))).filter("_k").drop("_k")
+    w7 = lww_reduce_late(d7, key="url", dedup=False, hash_key=True)
+    w7 = (w7.withColumnRenamed("lsn", "_lsn").withColumnRenamed("seq", "_seq")
+          .withColumn("_bucket", F.pmod(F.xxhash64("url"), F.lit(8)).cast("int")))
+    q7 = LakeTable._bucket_local_dedup(w7.repartition(8, "_bucket"), "url")
     p7 = plan_of(q7)
-    sections.append(("sort-strategy merge: single exchange + window LWW", q7, p7))
-    checks.append(("sort LWW: exactly one Exchange (window reuses the bucket repartition)",
-                   p7.count("Exchange") - p7.count("ReusedExchange") * 2 == 1
-                   or len(re.findall(r"\(\d+\) Exchange", p7)) == 1))
+    lines7 = p7.splitlines()
+    # formatted explain: "(N) Exchange" then its Input and Arguments
+    # lines. Payload may travel under aggregate-buffer names (first#,
+    # valueSet#), so count every hash exchange whose input is not just
+    # the winner reduce's narrow columns.
+    narrow7 = {"_w_key", "_w_key2", "_salt", "_w", "max"}
+    payload_exch7 = sum(
+        bool(re.match(r"\(\d+\) Exchange$", ln.strip()))
+        and "hashpartitioning" in lines7[i + 2]
+        and not set(re.findall(r"(\w+)#", lines7[i + 1])) <= narrow7
+        for i, ln in enumerate(lines7))
+    sections.append(("mor merge: broadcast winners + one payload exchange", q7, p7))
+    checks.append(("mor merge: LWW winners arrive through a BroadcastExchange",
+                   "BroadcastExchange" in p7 and "BroadcastHashJoin" in p7))
+    checks.append(("mor merge: exactly one hash Exchange carries payload (bucket repartition)",
+                   payload_exch7 == 1))
 
     # 8. connected-components iteration: label pull joins shuffle ONLY
     # narrow (node, comp) longs — no payload columns in the exchanges.
@@ -157,8 +171,6 @@ def main():
 
     from pyspark.sql import types as T
 
-    from database_delta_plugins_spark.lake.table import LakeTable
-
     mordir = _tf.mkdtemp(prefix="audit_mor_")
     _sh.rmtree(mordir)
     mschema = T.StructType([
@@ -175,8 +187,7 @@ def main():
             [("a", "v1", "I", 1, 0), ("b", "w1", "I", 2, 0)],
             [("a", "v2", "U", 3, 0)],
             [("b", None, "D", 4, 0)]]):
-        mt.merge(spark.createDataFrame(rows, mupd), epoch_id=e + 1,
-                 lww_strategy="sort")
+        mt.merge(spark.createDataFrame(rows, mupd), epoch_id=e + 1)
         mt = mt.refresh()
     q9 = mt.scan()
     p9 = plan_of(q9)

@@ -41,11 +41,6 @@ def main() -> None:
                     default="parquet",
                     help="event-log encoding; json = Debezium-JSON-lines "
                          "(binary as base64)")
-    ap.add_argument("--lww-strategy", choices=["late", "sort"], default="late",
-                    help="winner selection: 'late' = tiny salted reduce + "
-                         "hashed-key broadcast (payload shuffles winners "
-                         "only); 'sort' = single-exchange bucket-sort "
-                         "window (no broadcast, for ratio~1 insert streams)")
     ap.add_argument("--derive-text", action="store_true",
                     help="run extract_text(html) in the apply path")
     ap.add_argument("--normalize-lang", action="store_true")
@@ -78,7 +73,6 @@ def main() -> None:
         derive_text_from_html=args.derive_text,
         normalize_lang=args.normalize_lang,
         write_mode=args.write_mode,
-        lww_strategy=args.lww_strategy,
         source_format=args.source_format,
         runtime_args=runtime_args,
         tables=(dict(kv.split("=", 1) for kv in args.table_map)
